@@ -244,7 +244,10 @@ def ancestor_closure(
     one |E|-row aggregate on the distance-1 relation instead of
     silently emitting duplicate pairs on a multi-parent DAG.
     Convergence is schedule-independent, so the result remains
-    oracle-checkable against a recursive CTE.
+    oracle-checkable against a recursive CTE. A cycle (which the
+    per-node aggregate cannot see) or a chain at least 2^max_rounds
+    deep raises ValueError when the rounds run out, instead of
+    returning a non-converged closure.
     """
     base = (
         edges.select(F.col(node).alias("node"), F.col(parent).alias("anc"))
@@ -286,8 +289,14 @@ def ancestor_closure(
         # jump empty => every chain is shorter than 2^(r+1), and new
         # pairs beyond it cannot exist; counts only the increment
         if jump.count() == 0:
-            break
-    return cl.select("node", "anc")
+            return cl.select("node", "anc")
+    # out of rounds with pairs still at distance 2^max_rounds: a cycle
+    # (never converges) or a chain at least that deep — either way the
+    # closure is not known to be complete, so fail rather than return it
+    raise ValueError(
+        f"ancestor_closure did not converge in {max_rounds} rounds: the "
+        f"input has a cycle or a chain at least 2**{max_rounds} deep"
+    )
 
 
 def pagerank_int(

@@ -54,12 +54,12 @@ wrote). ``read_snapshot(..., predicate=[(col, op, lit), ...])``
 drops files whose stat range provably excludes the conjunction
 BEFORE Spark ever lists them — at 100 TB this is the difference
 between a point lookup touching O(selectivity) files and planning a
-million-file scan. ``merge_into`` uses the same stats to pre-prune
-its touched-file search to files whose key range intersects the
-update batch. Pruning is conservative: a file with missing stats (or
-a string column, where parquet footer truncation can make the stored
-max an unsafe bound) is always kept, so results never change — only
-the file list shrinks.
+million-file scan. ``merge_into`` and ``apply_changes`` use the same
+stats to pre-prune their touched-file search to files whose key range
+intersects the change set. Pruning is conservative: a file with
+missing stats (or a string column, where parquet footer truncation
+can make the stored max an unsafe bound) is always kept, so results
+never change — only the file list shrinks.
 
 Bloom-filter skipping (round 7): min/max ranges cannot exclude files
 for an EQUALITY probe on a high-cardinality key whose values
@@ -71,10 +71,12 @@ k=7, ~1% false positives) in the manifest; ``read_snapshot`` /
 ``prune_files`` consult it for ``=`` conjuncts and drop files whose
 filter proves the value absent. This also covers STRING keys, which
 the range stats deliberately never prune on (footer truncation).
-Every mutation path (append / merge / delete / compact / CDC apply)
-rebuilds filters for the files it writes and carries the column list
-forward, so the skipping survives the table's whole lifecycle. False
-positives only ever ADD files to the scan — results never change.
+Every mutation publishes through one commit step (``_commit``), which
+builds version v+1 from version v's manifest: it keeps the surviving
+files' stats, harvests stats and filters for the files the mutation
+wrote, and carries the column list forward, so the skipping survives
+the table's whole lifecycle. False positives only ever ADD files to
+the scan — results never change.
 
 Schema evolution: ``append_table(..., merge_schema=True)`` widens the
 table schema with the batch's new columns (additive only — a changed
@@ -85,6 +87,7 @@ columns, and time travel to old versions still sees the old schema.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -153,6 +156,47 @@ def _publish(path: str, version: int, manifest: dict) -> None:
         ) from None
     finally:
         os.unlink(tmp)
+
+
+def _commit(
+    path: str,
+    base: dict,
+    op: str,
+    added: list[str],
+    dropped=(),
+    schema: dict | None = None,
+    app_ids: dict | None = None,
+) -> int:
+    """The one commit step every mutation goes through: build version
+    v+1 from `base` (version v's manifest) and publish it.
+
+    Files are the survivors (base files minus `dropped`, in order)
+    followed by `added`. Survivors keep their stats entries; added
+    files get fresh footer stats plus Bloom filters for the carried
+    `bloom_columns`. `schema` and `app_ids` carry over unless the op
+    passes replacements. Returns the published version."""
+    v = base["version"] + 1
+    gone = set(dropped)
+    survivors = [f for f in base["files"] if f not in gone]
+    stats = base.get("stats", {})
+    bloom_cols = base.get("bloom_columns", [])
+    _publish(
+        path,
+        v,
+        {
+            "version": v,
+            "op": op,
+            "files": survivors + added,
+            "schema": base["schema"] if schema is None else schema,
+            "app_ids": base.get("app_ids", {}) if app_ids is None else app_ids,
+            "bloom_columns": bloom_cols,
+            "stats": {
+                **{f: stats[f] for f in survivors if f in stats},
+                **_stats_for(path, added, bloom_cols),
+            },
+        },
+    )
+    return v
 
 
 def _write_txn_files(df: DataFrame, path: str) -> list[str]:
@@ -365,11 +409,62 @@ def _stats_for(
 _OPS = ("=", "<", "<=", ">", ">=")
 
 
+def _comparable(col: str, cs: dict, lit):
+    """(lo, hi, lit) of one conjunct in a form whose order matches the
+    column's, or None when the conjunct cannot prune. Raises on a
+    literal whose type cannot be compared to the column's stats."""
+    import datetime  # noqa: PLC0415
+
+    if cs["t"] == "n":
+        if not isinstance(lit, (int, float)) or isinstance(lit, bool):
+            raise ValueError(
+                f"numeric column {col!r} needs a numeric literal, "
+                f"got {lit!r}"
+            )
+        return cs["lo"], cs["hi"], lit
+    # 'd': ISO-8601 bounds compared lexicographically
+    when = lit
+    if isinstance(lit, str):
+        # strict ISO-8601 only: a malformed literal like '2026/08/14'
+        # compares lexicographically in the wrong order and would
+        # wrongly EXCLUDE files — fail loud, matching the numeric
+        # branch. Parse (not just validate) so a space-separated
+        # timestamp string re-isoformats with the 'T' the stored
+        # bounds use.
+        for parse in (datetime.datetime, datetime.date):
+            try:
+                when = parse.fromisoformat(lit)
+                break
+            except ValueError:
+                pass
+    if not isinstance(when, datetime.date):
+        raise ValueError(
+            f"date/timestamp column {col!r} needs a date, "
+            f"datetime, or ISO-8601 string literal, got {lit!r}"
+        )
+    if isinstance(when, datetime.datetime) and when.tzinfo is not None:
+        # naive footer bounds vs tz-aware literal is ambiguous without
+        # a session tz: don't prune on this conjunct (row-level filter
+        # still applies)
+        return None
+    # Granularity normalization: a DATE column's bounds store as
+    # 'YYYY-MM-DD' while a midnight datetime literal isoformats to
+    # 'YYYY-MM-DDT00:00:00' — lexicographically GREATER than its own
+    # date, so an unpadded compare wrongly excludes the file holding
+    # the matching date (Spark casts date to midnight timestamp and
+    # matches the row). Pad every date-only string — literal AND
+    # bounds — to midnight-timestamp granularity; that is exactly
+    # Spark's date->timestamp promotion, so comparisons stay exact in
+    # both mismatch directions.
+    def pad(iso: str) -> str:
+        return iso if "T" in iso else iso + "T00:00:00"
+
+    return pad(cs["lo"]), pad(cs["hi"]), pad(when.isoformat())
+
+
 def _file_may_match(fstats: dict | None, predicate) -> bool:
     """Conservative file-level test: False only when the stats PROVE no
     row in the file satisfies every conjunct."""
-    import datetime  # noqa: PLC0415
-
     if not fstats:
         return True
     if fstats.get("rows") == 0:
@@ -386,78 +481,17 @@ def _file_may_match(fstats: dict | None, predicate) -> bool:
         cs = fstats.get("cols", {}).get(col)
         if cs is None or cs["t"] == "s":
             continue  # no safe bounds -> cannot exclude
-        if cs["t"] == "d":
-            if isinstance(lit, str):
-                # strict ISO-8601 only: a malformed literal like
-                # '2026/08/14' compares lexicographically in the wrong
-                # order and would wrongly EXCLUDE files — fail loud,
-                # matching the numeric branch. Parse (not just
-                # validate) so a space-separated timestamp string
-                # re-isoformats with the 'T' the stored bounds use.
-                try:
-                    lit = datetime.datetime.fromisoformat(lit)
-                except ValueError:
-                    try:
-                        lit = datetime.date.fromisoformat(lit)
-                    except ValueError:
-                        raise ValueError(
-                            f"date/timestamp column {col!r} needs a "
-                            f"date, datetime, or ISO-8601 string "
-                            f"literal, got {lit!r}"
-                        ) from None
-            if isinstance(lit, datetime.datetime):
-                if lit.tzinfo is not None:
-                    # naive footer bounds vs tz-aware literal is
-                    # ambiguous without a session tz: don't prune on
-                    # this conjunct (row-level filter still applies)
-                    continue
-                lit = lit.isoformat()
-            elif isinstance(lit, datetime.date):
-                lit = lit.isoformat()
-            else:
-                raise ValueError(
-                    f"date/timestamp column {col!r} needs a date, "
-                    f"datetime, or ISO-8601 string literal, got {lit!r}"
-                )
-            # Granularity normalization: a DATE column's bounds store
-            # as 'YYYY-MM-DD' while a midnight datetime literal
-            # isoformats to 'YYYY-MM-DDT00:00:00' — lexicographically
-            # GREATER than its own date, so an unpadded compare
-            # wrongly excludes the file holding the matching date
-            # (Spark casts date to midnight timestamp and matches the
-            # row). Pad every date-only string — literal AND bounds —
-            # to midnight-timestamp granularity; that is exactly
-            # Spark's date->timestamp promotion, so comparisons stay
-            # exact in both mismatch directions.
-            if "T" not in lit:
-                lit += "T00:00:00"
-            lo, hi = cs["lo"], cs["hi"]
-            lo = lo if "T" in lo else lo + "T00:00:00"
-            hi = hi if "T" in hi else hi + "T00:00:00"
-            if (
-                (op == "=" and not (lo <= lit <= hi))
-                or (op == "<" and lo >= lit)
-                or (op == "<=" and lo > lit)
-                or (op == ">" and hi <= lit)
-                or (op == ">=" and hi < lit)
-            ):
-                return False
+        bounds = _comparable(col, cs, lit)
+        if bounds is None:
             continue
-        elif cs["t"] == "n":
-            if not isinstance(lit, (int, float)) or isinstance(lit, bool):
-                raise ValueError(
-                    f"numeric column {col!r} needs a numeric literal, "
-                    f"got {lit!r}"
-                )
-        lo, hi = cs["lo"], cs["hi"]
-        excluded = (
+        lo, hi, lit = bounds
+        if (
             (op == "=" and not (lo <= lit <= hi))
             or (op == "<" and lo >= lit)
             or (op == "<=" and lo > lit)
             or (op == ">" and hi <= lit)
             or (op == ">=" and hi < lit)
-        )
-        if excluded:
+        ):
             return False
     return True
 
@@ -497,20 +531,14 @@ def create_table(
     os.makedirs(_commits_dir(path), exist_ok=True)
     os.makedirs(os.path.join(path, _DATA), exist_ok=True)
     files = _write_txn_files(df, path)
-    _publish(
-        path,
-        0,
-        {
-            "version": 0,
-            "op": "create",
-            "files": files,
-            "schema": df.schema.jsonValue(),
-            "app_ids": {},
-            "bloom_columns": bloom_cols,
-            "stats": _stats_for(path, files, bloom_cols),
-        },
-    )
-    return 0
+    # version 0 is built from the empty table with the declared schema
+    empty = {
+        "version": -1,
+        "files": [],
+        "schema": df.schema.jsonValue(),
+        "bloom_columns": bloom_cols,
+    }
+    return _commit(path, empty, "create", files)
 
 
 def read_snapshot(
@@ -563,8 +591,7 @@ def append_table(df: DataFrame, path: str, merge_schema: bool = False) -> int:
     the old schema. A changed dtype for an existing column is rejected
     either way (evolution is add-only, like Delta's mergeSchema). The
     batch may also OMIT existing columns — they land as NULL."""
-    v = latest_version(path)
-    manifest = _load_manifest(path, v)
+    manifest = _load_manifest(path, latest_version(path))
     table_schema = StructType.fromJson(manifest["schema"])
     by_name = {f.name: f for f in table_schema.fields}
     added = []
@@ -592,21 +619,9 @@ def append_table(df: DataFrame, path: str, merge_schema: bool = False) -> int:
         ]
     )
     files = _write_txn_files(aligned, path)
-    bloom_cols = manifest.get("bloom_columns", [])
-    new = {
-        "version": v + 1,
-        "op": "append",
-        "files": manifest["files"] + files,
-        "schema": new_schema.jsonValue(),
-        "app_ids": manifest.get("app_ids", {}),
-        "bloom_columns": bloom_cols,
-        "stats": {
-            **manifest.get("stats", {}),
-            **_stats_for(path, files, bloom_cols),
-        },
-    }
-    _publish(path, v + 1, new)
-    return v + 1
+    return _commit(
+        path, manifest, "append", files, schema=new_schema.jsonValue()
+    )
 
 
 def _file_uri_to_rel(path: str, uri: str) -> str:
@@ -632,6 +647,75 @@ def _touched_files(
     # relpath disagree byte-for-byte)
     by_base = {os.path.basename(f): f for f in snap_files}
     return sorted(by_base[os.path.basename(r)] for r in rel)
+
+
+def _keyed_rewrite(
+    spark: SparkSession,
+    path: str,
+    op: str,
+    upserts: DataFrame | None,
+    delete_keys: DataFrame | None,
+    key: list[str],
+    app_id: tuple[str, int] | None,
+) -> dict:
+    """The keyed file-granular rewrite behind merge_into and
+    apply_changes: files holding any key of `upserts` or `delete_keys`
+    are rewritten without those keys, `upserts` are added, and the
+    result commits as `op` together with the `app_id` ledger entry."""
+    v = latest_version(path)
+    manifest = _load_manifest(path, v)
+    skipped = {"version": v, "skipped": True, "files_rewritten": 0}
+    app_ids = dict(manifest.get("app_ids", {}))
+    if app_id is not None and app_ids.get(app_id[0], -1) >= app_id[1]:
+        return skipped
+    parts = [df.select(*key) for df in (upserts, delete_keys) if df is not None]
+    if not parts:
+        return skipped
+    key_rows = functools.reduce(DataFrame.unionByName, parts)
+    keys = key_rows.distinct()
+
+    # stats fast-path: a single-column key lets the manifest exclude
+    # files whose key range cannot intersect the change set BEFORE the
+    # semi-join scan — a selective rewrite plans O(matched files) from
+    # metadata alone (min/max need no distinct, so no shuffle here)
+    candidates = manifest["files"]
+    stats = manifest.get("stats", {})
+    if len(key) == 1 and stats:
+        row = key_rows.agg(
+            F.min(key[0]).alias("lo"), F.max(key[0]).alias("hi")
+        ).collect()[0]
+        if row["lo"] is None:
+            candidates = []
+        else:
+            rng = [(key[0], ">=", row["lo"]), (key[0], "<=", row["hi"])]
+            candidates = [
+                f for f in candidates if _file_may_match(stats.get(f), rng)
+            ]
+    touched = _touched_files(
+        candidates, path, spark, lambda df: df.join(keys, key, "left_semi")
+    )
+    to_write = upserts
+    if touched:
+        kept = spark.read.parquet(
+            *[os.path.join(path, f) for f in touched]
+        ).join(keys, key, "left_anti")
+        to_write = kept if upserts is None else kept.unionByName(upserts)
+    if to_write is None and app_id is None:
+        # no-op CDC batch (delete_keys matched nothing, no upserts):
+        # don't commit a version whose file list is identical to the
+        # previous one. With an app_id we DO fall through to a
+        # metadata-only commit so the exactly-once ledger advances.
+        return skipped
+    files = [] if to_write is None else _write_txn_files(to_write, path)
+    if app_id is not None:
+        app_ids[app_id[0]] = app_id[1]
+    new_v = _commit(path, manifest, op, files, touched, app_ids=app_ids)
+    return {
+        "version": new_v,
+        "skipped": False,
+        "files_rewritten": len(touched),
+        "files_untouched": len(manifest["files"]) - len(touched),
+    }
 
 
 def merge_into(
@@ -661,74 +745,14 @@ def merge_into(
     three times (key derivation for the semi/anti joins + the write);
     callers with an expensive update pipeline should persist() it.
     """
-    v = latest_version(path)
-    manifest = _load_manifest(path, v)
-    app_ids = dict(manifest.get("app_ids", {}))
-    if app_id is not None and app_ids.get(app_id[0], -1) >= app_id[1]:
-        return {"version": v, "skipped": True, "files_rewritten": 0}
-
-    keys = updates.select(*key).distinct()
-    # stats fast-path: a single-column key lets the manifest exclude
-    # files whose key range cannot intersect the update batch BEFORE
-    # the semi-join scan — a selective merge plans O(matched files)
-    # from metadata alone
-    candidates = manifest["files"]
-    stats = manifest.get("stats", {})
-    if len(key) == 1 and stats:
-        row = updates.agg(
-            F.min(key[0]).alias("lo"), F.max(key[0]).alias("hi")
-        ).collect()[0]
-        if row["lo"] is None:
-            candidates = []
-        else:
-            rng = [(key[0], ">=", row["lo"]), (key[0], "<=", row["hi"])]
-            candidates = [
-                f for f in candidates if _file_may_match(stats.get(f), rng)
-            ]
-    touched = _touched_files(
-        candidates, path, spark, lambda df: df.join(keys, key, "left_semi")
-    )
-    untouched = [f for f in manifest["files"] if f not in set(touched)]
-    if touched:
-        kept = spark.read.parquet(
-            *[os.path.join(path, f) for f in touched]
-        ).join(keys, key, "left_anti")
-        to_write = kept.unionByName(updates)
-    else:
-        to_write = updates
-    files = _write_txn_files(to_write, path)
-    if app_id is not None:
-        app_ids[app_id[0]] = app_id[1]
-    new = {
-        "version": v + 1,
-        "op": "merge",
-        "files": untouched + files,
-        "schema": manifest["schema"],
-        "app_ids": app_ids,
-        "bloom_columns": manifest.get("bloom_columns", []),
-        "stats": {
-            **{
-                f: s for f, s in manifest.get("stats", {}).items()
-                if f not in set(touched)
-            },
-            **_stats_for(path, files, manifest.get("bloom_columns", [])),
-        },
-    }
-    _publish(path, v + 1, new)
-    return {
-        "version": v + 1,
-        "skipped": False,
-        "files_rewritten": len(touched),
-        "files_untouched": len(untouched),
-    }
+    return _keyed_rewrite(spark, path, "merge", updates, None, key, app_id)
 
 
 def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
     """Delete rows matching a SQL predicate, snapshot-isolated. Only
     files containing a matching row are rewritten (their keep-side);
     all other files carry over untouched. Returns rows deleted."""
-    v = latest_version(path)
-    manifest = _load_manifest(path, v)
+    manifest = _load_manifest(path, latest_version(path))
     touched = _touched_files(
         manifest["files"], path, spark, lambda df: df.filter(predicate)
     )
@@ -743,22 +767,7 @@ def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
             files = _write_txn_files(kept, path)
         # else: every row in the touched files matched — drop them
         # from the manifest without writing empty replacements
-    new = {
-        "version": v + 1,
-        "op": "delete",
-        "files": [f for f in manifest["files"] if f not in set(touched)] + files,
-        "schema": manifest["schema"],
-        "app_ids": manifest.get("app_ids", {}),
-        "bloom_columns": manifest.get("bloom_columns", []),
-        "stats": {
-            **{
-                f: s for f, s in manifest.get("stats", {}).items()
-                if f not in set(touched)
-            },
-            **_stats_for(path, files, manifest.get("bloom_columns", [])),
-        },
-    }
-    _publish(path, v + 1, new)
+    _commit(path, manifest, "delete", files, touched)
     return deleted
 
 
@@ -769,22 +778,7 @@ def compact_table(spark: SparkSession, path: str, target_files: int) -> int:
     manifest = _load_manifest(path, v)
     df = read_snapshot(spark, path, v).repartition(target_files)
     files = _write_txn_files(df, path)
-    _publish(
-        path,
-        v + 1,
-        {
-            "version": v + 1,
-            "op": "compact",
-            "files": files,
-            "schema": manifest["schema"],
-            "app_ids": manifest.get("app_ids", {}),
-            "bloom_columns": manifest.get("bloom_columns", []),
-            "stats": _stats_for(
-                path, files, manifest.get("bloom_columns", [])
-            ),
-        },
-    )
-    return v + 1
+    return _commit(path, manifest, "compact", files, manifest["files"])
 
 
 def history(path: str) -> list[dict]:
@@ -889,81 +883,9 @@ def apply_changes(
     range/contents intersect the change set are rewritten). `app_id`
     rides the manifest for exactly-once replay, same contract as
     merge_into. Raises CommitConflict for the caller to retry."""
-    v = latest_version(path)
-    manifest = _load_manifest(path, v)
-    app_ids = dict(manifest.get("app_ids", {}))
-    if app_id is not None and app_ids.get(app_id[0], -1) >= app_id[1]:
-        return {"version": v, "skipped": True, "files_rewritten": 0}
-
-    parts = []
-    if upserts is not None:
-        parts.append(upserts.select(*key))
-    if delete_keys is not None:
-        parts.append(delete_keys.select(*key))
-    if not parts:
-        return {"version": v, "skipped": True, "files_rewritten": 0}
-    all_keys = parts[0]
-    for p in parts[1:]:
-        all_keys = all_keys.unionByName(p)
-    all_keys = all_keys.distinct()
-
-    candidates = manifest["files"]
-    stats = manifest.get("stats", {})
-    if len(key) == 1 and stats:
-        row = all_keys.agg(
-            F.min(key[0]).alias("lo"), F.max(key[0]).alias("hi")
-        ).collect()[0]
-        if row["lo"] is None:
-            candidates = []
-        else:
-            rng = [(key[0], ">=", row["lo"]), (key[0], "<=", row["hi"])]
-            candidates = [
-                f for f in candidates if _file_may_match(stats.get(f), rng)
-            ]
-    touched = _touched_files(
-        candidates, path, spark, lambda df: df.join(all_keys, key, "left_semi")
+    return _keyed_rewrite(
+        spark, path, "apply_changes", upserts, delete_keys, key, app_id
     )
-    untouched = [f for f in manifest["files"] if f not in set(touched)]
-    to_write = None
-    if touched:
-        to_write = spark.read.parquet(
-            *[os.path.join(path, f) for f in touched]
-        ).join(all_keys, key, "left_anti")
-    if upserts is not None:
-        to_write = (
-            upserts if to_write is None else to_write.unionByName(upserts)
-        )
-    if not touched and to_write is None and app_id is None:
-        # no-op CDC batch (delete_keys matched nothing, no upserts):
-        # don't commit a version whose file list is identical to the
-        # previous one. With an app_id we DO fall through to a
-        # metadata-only commit so the exactly-once ledger advances.
-        return {"version": v, "skipped": True, "files_rewritten": 0}
-    files = _write_txn_files(to_write, path) if to_write is not None else []
-    if app_id is not None:
-        app_ids[app_id[0]] = app_id[1]
-    new = {
-        "version": v + 1,
-        "op": "apply_changes",
-        "files": untouched + files,
-        "schema": manifest["schema"],
-        "app_ids": app_ids,
-        "bloom_columns": manifest.get("bloom_columns", []),
-        "stats": {
-            **{
-                f: s for f, s in manifest.get("stats", {}).items()
-                if f not in set(touched)
-            },
-            **_stats_for(path, files, manifest.get("bloom_columns", [])),
-        },
-    }
-    _publish(path, v + 1, new)
-    return {
-        "version": v + 1,
-        "skipped": False,
-        "files_rewritten": len(touched),
-        "files_untouched": len(untouched),
-    }
 
 
 def incremental_sync(
@@ -1021,30 +943,13 @@ def compact_small_files(
     ]
     if len(small) < 2:
         return {"version": v, "skipped": True, "files_compacted": 0}
-    keep = [f for f in manifest["files"] if f not in set(small)]
     df = spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(
         *[os.path.join(path, f) for f in small]
     ).coalesce(target_files)
     files = _write_txn_files(df, path)
-    _publish(
-        path,
-        v + 1,
-        {
-            "version": v + 1,
-            "op": "compact_small",
-            "files": keep + files,
-            "schema": manifest["schema"],
-            "app_ids": manifest.get("app_ids", {}),
-            "bloom_columns": manifest.get("bloom_columns", []),
-            "stats": {
-                **{f: s for f, s in stats.items() if f in set(keep)},
-                **_stats_for(path, files, manifest.get("bloom_columns", [])),
-            },
-        },
-    )
     return {
-        "version": v + 1,
+        "version": _commit(path, manifest, "compact_small", files, small),
         "skipped": False,
         "files_compacted": len(small),
-        "files_kept": len(keep),
+        "files_kept": len(manifest["files"]) - len(small),
     }

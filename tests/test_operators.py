@@ -480,6 +480,24 @@ def test_ancestor_closure_chain_and_forest(spark):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "edges",
+    [
+        pytest.param([(1, 0), (1, 2), (2, 0)], id="multi_parent"),
+        pytest.param([(1, 2), (2, 1)], id="two_cycle"),
+    ],
+)
+def test_ancestor_closure_rejects_out_of_contract_input(spark, edges):
+    """Outside the functional-forest contract the closure fails loudly
+    instead of returning duplicate or non-converged pairs: a node with
+    two parents fails the up-front check, a cycle runs out of rounds."""
+    from gpu_olap_engine_spark.operators.graph import ancestor_closure
+
+    df = spark.createDataFrame(edges, "node long, parent long")
+    with pytest.raises(ValueError):
+        ancestor_closure(df, max_rounds=5)
+
+
 def test_delete_where_rewrites_dataset(spark, tmp_path):
     from gpu_olap_engine_spark.sources import delete_where
 
