@@ -373,41 +373,22 @@ def should_run_rep(
 
 
 def _clear_engine_caches(spark, notes: list[str]) -> None:
-    """Drop every cross-QUERY relation cache before a timed headline
-    row (r14, VERDICT r13 #5/#9): operators/dedup.py memoizes the
-    persisted shingle relation per (plan, args) so that e.g. q76's
+    """Drop every cached relation before a timed headline row (r14,
+    VERDICT r13 #5/#9): the operators persist shared relations (the
+    shingle table, the keyed near-dup relation) and Spark's cache
+    serves them to any later plan over the same input, so e.g. q76's
     timed row used to inherit the relation q73's row had already
-    built and persisted — cross-entry state that sits too close to
-    the "cached intermediate inside the timed region" line. Clearing
-    between rows makes every row pay its own builds, exactly like a
-    standalone run of that query; persists INSIDE one query's
-    execution (pagerank's ew, q141's oriented edges) are untouched —
-    they materialize and die within the row that pays for them.
-    Methodology change recorded in OPTIMIZATION_r14.md with the old
-    numbers kept (q73/q76/dedup_minhash_lsh are the affected rows).
+    built. Clearing between rows makes every row pay its own builds,
+    exactly like a standalone run of that query. Methodology change
+    recorded in OPTIMIZATION_r14.md with the old numbers kept
+    (q73/q76/dedup_minhash_lsh are the affected rows).
 
-    Each step has its own handler: cache hygiene must never kill the
-    bench, so a failed step is recorded in `notes` (the artifact's)
-    and the row still runs."""
-    import importlib  # noqa: PLC0415
-
-    def drop_memo(module: str, attr: str) -> None:
-        mod = importlib.import_module(f"gpu_olap_engine_spark.operators.{module}")
-        memo = getattr(mod, attr)
-        for df in list(memo.values()):
-            df.unpersist()
-        memo.clear()
-
-    steps = (
-        ("dedup._SHINGLE_CACHE", lambda: drop_memo("dedup", "_SHINGLE_CACHE")),
-        ("similarity._KEYED_CACHE", lambda: drop_memo("similarity", "_KEYED_CACHE")),
-        ("catalog.clearCache", lambda: spark.catalog.clearCache()),
-    )
-    for name, step in steps:
-        try:
-            step()
-        except Exception as e:  # noqa: BLE001
-            notes.append(f"cache clear {name}: {type(e).__name__}: {e}"[:300])
+    Cache hygiene must never kill the bench: a failed clear is
+    recorded in `notes` (the artifact's) and the row still runs."""
+    try:
+        spark.catalog.clearCache()
+    except Exception as e:  # noqa: BLE001
+        notes.append(f"cache clear: {type(e).__name__}: {e}"[:300])
 
 
 def _stderr_tail(path: str, lines: int = 30, chars: int = 3000) -> str:

@@ -20,54 +20,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Shingle cache keyed by (input plan, id/text cols, k): repeated
-# dedup calls over the same corpus (q55, q70, dedup_clusters,
-# dedup_minhash_lsh in one session) share ONE persisted shingle
-# relation instead of churning persist/unpersist. Bounded; evicting
-# an entry only unpersists it — lineage stays valid, so any
-# still-unevaluated result that referenced it just recomputes
-# (slower, never wrong). Guarded by a lock: the driver may execute
-# query callables concurrently.
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-_SHINGLE_CACHE_MAX = 4
-
-import threading as _threading  # noqa: E402
-
-_SHINGLE_LOCK = _threading.Lock()
-
-
-def _shingles_cached(
-    df: DataFrame, id_col: str, text_col: str, k: int
-) -> DataFrame:
-    """shingles(), persisted and memoized per (input, args). Keyed by
-    the analyzed plan's semantic hash so fresh DataFrame objects over
-    the same scan hit the same entry."""
-    try:
-        plan_key = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # internal API moved — degrade to per-object
-        plan_key = id(df)
-    key = (plan_key, id_col, text_col, k)
-    with _SHINGLE_LOCK:
-        sh = _SHINGLE_CACHE.get(key)
-        if sh is None:
-            sh = shingles(df, id_col, text_col, k).persist()
-            if len(_SHINGLE_CACHE) >= _SHINGLE_CACHE_MAX:
-                _SHINGLE_CACHE.pop(next(iter(_SHINGLE_CACHE))).unpersist()
-            _SHINGLE_CACHE[key] = sh
-        return sh
-
-
-# r13 note: a generalized persist-memo for intra-operator shared
-# subtrees (span-stats `per`, lines `occ`, simhash `wc`, q143's
-# events projection) was built and measured this round — every one of
-# those persists LOST in in-process alternating A/Bs at sf0.1
-# (span 4.41 vs 1.39 s, lines 2.26 vs 1.13 s, simhash 10.0 vs 3.55 s,
-# q143 1.44 vs 1.39 s): the cache materialization barrier (eager full
-# evaluation + columnar write) costs more than the second
-# scan+explode it saves on these narrow inputs. The shingle cache
-# above survives because its consumers span SEPARATE actions (several
-# registry entries share one corpus' shingles), where recompute is
-# paid per action and the barrier amortizes.
+# Relations shared across consumers are persisted with plain
+# `.persist()`: Spark's CacheManager matches a later plan against the
+# cached one by `sameResult`, so repeated dedup calls over the same
+# corpus (q55, q70, dedup_clusters, dedup_minhash_lsh in one session)
+# read ONE cached shingle relation, and `spark.catalog.clearCache()`
+# or `unpersist()` releases it.
+#
+# r13 note: persisting intra-operator shared subtrees (span-stats
+# `per`, lines `occ`, simhash `wc`, q143's events projection) LOST in
+# in-process alternating A/Bs at sf0.1 (span 4.41 vs 1.39 s, lines
+# 2.26 vs 1.13 s, simhash 10.0 vs 3.55 s, q143 1.44 vs 1.39 s): the
+# cache materialization barrier (eager full evaluation + columnar
+# write) costs more than the second scan+explode it saves on these
+# narrow inputs. The shingle persist pays because the shingle
+# relation feeds several joins of one plan and several registry
+# entries over one corpus.
 
 # Affine permutation constants for MinHash: h_i(x) = (A[i]*x + B[i]) % P.
 # P is prime; A,B < 2^31 so A*x never overflows int64 (x < P < 2^31).
@@ -251,13 +219,14 @@ def minhash_dedup_pairs(
     candidate join -> exact-Jaccard verify -> threshold.
 
     The shingle relation feeds three consumers (signatures, verify
-    side a, verify side b); it is persisted AND memoized per input
-    (_shingles_cached) so the tokenize+explode+distinct work runs once
-    per corpus even across the session's many dedup entry points. At
-    100 TB the equivalent is materializing the shingle table to
-    storage once per corpus snapshot.
+    side a, verify side b); it is persisted, so the
+    tokenize+explode+distinct work runs once per corpus, and Spark's
+    cache serves it to every later dedup entry point over the same
+    corpus until the cache is cleared. At 100 TB the equivalent is
+    materializing the shingle table to storage once per corpus
+    snapshot.
     """
-    sh = _shingles_cached(df, id_col, text_col, k)
+    sh = shingles(df, id_col, text_col, k).persist()
     pairs = lsh_candidate_pairs(minhash_signatures(sh))
     return jaccard_verify(sh, pairs).filter(F.col("jaccard") >= threshold)
 
@@ -268,7 +237,7 @@ def ngram_jaccard_pairs(
     """Exact all-pairs n-gram Jaccard via the shingle inverted index
     (no LSH): sub-quadratic because only pairs sharing >= 1 shingle
     materialize. The exact baseline the LSH path is validated against."""
-    sh = _shingles_cached(df, id_col, text_col, k)
+    sh = shingles(df, id_col, text_col, k).persist()
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     sa, sb = sh.alias("sa"), sh.alias("sb")
     inter = (
@@ -300,7 +269,7 @@ def ngram_containment_pairs(
     Same inverted-index candidate plan as ngram_jaccard_pairs (only
     pairs sharing a shingle materialize, never corpus-quadratic); the
     scoring denominator is the smaller set."""
-    sh = _shingles_cached(df, id_col, text_col, k)
+    sh = shingles(df, id_col, text_col, k).persist()
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
     sa, sb = sh.alias("sa"), sh.alias("sb")
     inter = (

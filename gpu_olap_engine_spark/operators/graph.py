@@ -32,7 +32,9 @@ def connected_components(
     round's checkpoint blocks to Spark's ContextCleaner (async, on
     py4j GC); blocks are MEMORY_AND_DISK so pre-cleanup accumulation
     spills rather than OOMs. For high-diameter graphs use
-    ``connected_components_star`` (O(log n) rounds).
+    ``connected_components_star`` (O(log n) rounds). Raises
+    ValueError when labels still change after ``max_iter`` rounds,
+    instead of returning a non-converged labeling.
     """
     # symmetrize via explode(array(fwd, rev)) rather than a two-branch
     # union: the union would evaluate the CALLER's edges subtree once
@@ -83,8 +85,11 @@ def connected_components(
         )
         labels = new_labels
         if changed == 0:
-            break
-    return labels.select("id", F.col("label").alias("cluster_id"))
+            return labels.select("id", F.col("label").alias("cluster_id"))
+    raise ValueError(
+        f"connected_components did not converge in {max_iter} rounds: "
+        "labels still changed in the last round"
+    )
 
 
 def connected_components_star(
@@ -111,6 +116,8 @@ def connected_components_star(
     giant component's minimum) is exactly the shape AQE skew-split
     handles. Convergence = the canonical edge set reaches a fixpoint
     (count + per-edge hash aggregate, one lightweight job per round).
+    Raises ValueError when the edge set still changes after
+    ``max_iter`` rounds.
     """
     # canonical parent edges (u > v): u points at a smaller node v.
     # localCheckpoint (eager) truncates lineage every round — without
@@ -193,6 +200,11 @@ def connected_components_star(
         if new_sig == sig:
             break
         sig = new_sig
+    else:
+        raise ValueError(
+            f"connected_components_star did not converge in {max_iter} "
+            "rounds: the edge set still changed in the last round"
+        )
     # stars: every node points at its component min; add the roots
     # and the self-loop-only singletons
     roots = e.select(F.col("v").alias("id")).subtract(

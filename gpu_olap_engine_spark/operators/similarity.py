@@ -221,48 +221,6 @@ def bucketed_topk(
     )
 
 
-_KEYED_CACHE: dict = {}
-_KEYED_CACHE_MAX = 8
-
-import threading as _threading  # noqa: E402
-
-_KEYED_LOCK = _threading.Lock()
-
-
-def _keyed_persisted(df: DataFrame) -> DataFrame:
-    """Persist-and-memoize a keyed relation that the gram blocking
-    consumes more than once (bucket-size aggregate + join back).
-
-    The keyed relation is the operator's expensive stage — an Arrow
-    mapInPandas derive (near-dup, decontaminate) or a k-means
-    assignment scan (semdedup) — and without materialization each
-    consumer re-executes the whole pass (measured: the operator's L1
-    wall was 2x the derive, scripts/r14_prof_neardup.py). A COUNT
-    window over bkey was A/B'd as the one-pass alternative and
-    REJECTED for scale: it shuffles the full relation on bare bkey,
-    whose cardinality the near-dup key domain caps at 128 — a hard
-    parallelism ceiling at 100 TB (the q72-fusion lesson). The
-    persist keeps the derive single-evaluation while every shuffle
-    stays on the scalable (bkey, chunk) group keys.
-
-    Same pattern, bounds and bench hygiene as dedup._SHINGLE_CACHE:
-    memoized per semantic plan hash, capped with unpersist eviction,
-    cleared by bench.py between timed rows so no row inherits
-    another's build."""
-    try:
-        plan_key = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # internal API moved — degrade to per-object
-        plan_key = id(df)
-    with _KEYED_LOCK:
-        cached = _KEYED_CACHE.get(plan_key)
-        if cached is None:
-            cached = df.persist()
-            if len(_KEYED_CACHE) >= _KEYED_CACHE_MAX:
-                _KEYED_CACHE.pop(next(iter(_KEYED_CACHE))).unpersist()
-            _KEYED_CACHE[plan_key] = cached
-        return cached
-
-
 def _qident(name: str) -> str:
     """Backtick-quoted SQL identifier with embedded backticks escaped
     (ADVICE r13 #1): every fragment call site that interpolates a
@@ -1199,17 +1157,17 @@ def gram_cross_pairs(
     (id_big, id_small, cosine) under every mode."""
     gated = "mlo" in keyed_big.columns and "mlo" in keyed_small.columns
     kcols = ["mlo", "mhi"] if gated else []
-    # r14 (guide §2.4/§4, same fix as _blocked_groups): both sides are
-    # persisted+memoized — the old shape evaluated keyed_big (the
-    # corpus derive, a Python mapInPandas pass) twice (size aggregate
-    # + join back) and, when big/small are filters of one shared
-    # keyed relation as in sim_decontaminate, the derive ran three
-    # times. With the persist each side materializes once; sizes
-    # aggregates map-side and broadcasts (|distinct bkey| <= 128).
-    # A union+window one-pass form was A/B-equal locally but REJECTED
-    # for the bare-bkey shuffle's <=128-way parallelism cap at scale.
-    keyed_big = _keyed_persisted(keyed_big)
-    keyed_small = _keyed_persisted(keyed_small)
+    # r14 (guide §2.4/§4, same fix as _blocked_groups): the big side
+    # is persisted — it feeds the size aggregate AND the join back,
+    # and unpersisted its derive (a Python mapInPandas pass) ran once
+    # per consumer. The small side has one consumer, so it is not;
+    # callers whose big/small are filters of one shared keyed
+    # relation (sim_decontaminate) persist that relation once
+    # themselves. Sizes aggregate map-side and broadcast
+    # (|distinct bkey| <= 128). A union+window one-pass form was
+    # A/B-equal locally but REJECTED for the bare-bkey shuffle's
+    # <=128-way parallelism cap at scale.
+    keyed_big = keyed_big.persist()
     sizes = keyed_big.groupBy("bkey").agg(F.count("*").alias("bsz"))
     nch = (
         F.when(F.col("bsz") <= max_bucket, F.lit(1))
@@ -1456,7 +1414,8 @@ def _blocked_groups(
     input) rides along when present.
 
     r14 (guide §2.4/§4 — profiled in scripts/r14_prof_neardup.py):
-    `keyed` is persisted+memoized (_keyed_persisted). The old shape
+    `keyed` is persisted; Spark's cache serves a repeat call over the
+    same input until it is cleared. The old shape
     consumed it twice — bucket-size aggregate + the join back — and
     `keyed` is the operator's expensive relation (a Python
     mapInPandas derive for near-dup/decontaminate, a k-means
@@ -1470,7 +1429,7 @@ def _blocked_groups(
     cols = ["bkey", "vid", "qvec"] + (
         ["mlo", "mhi"] if "mlo" in keyed.columns else []
     )
-    keyed = _keyed_persisted(keyed)
+    keyed = keyed.persist()
     sizes = keyed.groupBy("bkey").agg(F.count("*").alias("bsz"))
     nch = (
         F.when(F.col("bsz") <= max_bucket, F.lit(1))

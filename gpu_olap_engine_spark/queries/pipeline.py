@@ -465,7 +465,7 @@ def q73(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB of training data), candidates via equi-join on the shingle
     — never a text-to-text comparison."""
     docs = T(spark, sf_dir, "documents")
-    sh = D._shingles_cached(docs, "doc_id", "text", 8)  # columns (id, shingle)
+    sh = D.shingles(docs, "doc_id", "text", 8).persist()  # (id, shingle)
     bench = sh.filter(F.col("id") % 7 == 0).select("shingle").distinct()
     return (
         sh.filter(F.col("id") % 7 != 0)

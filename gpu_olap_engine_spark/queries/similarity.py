@@ -246,10 +246,11 @@ def sim_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic train-train work the symmetric operator would pay is
     skipped entirely. Emits (vec_id, n_eval_hits, max_cosine) per
     contaminated training vector; max over bit-identical IEEE cosines
-    is cross-engine exact."""
+    is cross-engine exact. The keyed relation is persisted before the
+    train/eval split, so both sides read one derive."""
     keyed = S._near_dup_keyed(
         T(spark, sf_dir, "embeddings"), "vec_id", "embedding", 10
-    )
+    ).persist()
     train = keyed.filter(F.col("vid") % 7 != 0)
     ev = keyed.filter(F.col("vid") % 7 == 0)
     return (

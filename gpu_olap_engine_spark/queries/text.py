@@ -214,7 +214,8 @@ def q76_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents")
     feats = X.quality_features(spread(docs), "doc_id", "text")
     d3 = (
-        D._shingles_cached(docs, "doc_id", "text", 3)
+        D.shingles(docs, "doc_id", "text", 3)
+        .persist()
         .groupBy("id")
         .agg(F.count("*").alias("n_distinct"))
     )

@@ -212,6 +212,18 @@ def _write_txn_files(df: DataFrame, path: str) -> list[str]:
     return out
 
 
+def _read_files(
+    spark: SparkSession, path: str, manifest: dict, files: list[str]
+) -> DataFrame:
+    """Read manifest-relative `files` through the manifest's schema.
+    An explicit schema reads files written before and after a schema
+    evolution alike (older files surface NULL for newer columns);
+    footer inference would take one file's columns for all of them."""
+    return spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(
+        *[os.path.join(path, f) for f in files]
+    )
+
+
 def _stat_value(v):
     """JSON-safe (tag, value) for a footer min/max. Tag 'n' compares
     numerically, 'd' lexicographically over ISO-8601 (zero-padded, so
@@ -566,11 +578,10 @@ def read_snapshot(
         rel, _total = prune_files(path, v, predicate)
     else:
         rel = manifest["files"]
-    files = [os.path.join(path, f) for f in rel]
-    if not files:
+    if not rel:
         df = spark.createDataFrame([], schema)
     else:
-        df = spark.read.schema(schema).parquet(*files)
+        df = _read_files(spark, path, manifest, rel)
     if predicate:
         for col, op, lit in predicate:
             c = F.col(col)
@@ -631,14 +642,15 @@ def _file_uri_to_rel(path: str, uri: str) -> str:
 
 
 def _touched_files(
-    snap_files: list[str], path: str, spark: SparkSession, matcher
+    snap_files: list[str], path: str, spark: SparkSession, manifest: dict,
+    matcher,
 ) -> list[str]:
     """Manifest-relative paths of the files containing rows selected by
     `matcher` (df -> filtered df). Driver-side size is O(#files) —
     metadata, not data."""
     if not snap_files:
         return []
-    df = spark.read.parquet(*[os.path.join(path, f) for f in snap_files])
+    df = _read_files(spark, path, manifest, snap_files)
     tagged = matcher(df.withColumn("__file", F.input_file_name()))
     uris = [r["__file"] for r in tagged.select("__file").distinct().collect()]
     rel = {_file_uri_to_rel(path, u) for u in uris}
@@ -692,13 +704,14 @@ def _keyed_rewrite(
                 f for f in candidates if _file_may_match(stats.get(f), rng)
             ]
     touched = _touched_files(
-        candidates, path, spark, lambda df: df.join(keys, key, "left_semi")
+        candidates, path, spark, manifest,
+        lambda df: df.join(keys, key, "left_semi"),
     )
     to_write = upserts
     if touched:
-        kept = spark.read.parquet(
-            *[os.path.join(path, f) for f in touched]
-        ).join(keys, key, "left_anti")
+        kept = _read_files(spark, path, manifest, touched).join(
+            keys, key, "left_anti"
+        )
         to_write = kept if upserts is None else kept.unionByName(upserts)
     if to_write is None and app_id is None:
         # no-op CDC batch (delete_keys matched nothing, no upserts):
@@ -754,12 +767,13 @@ def delete_where(spark: SparkSession, path: str, predicate: str) -> int:
     all other files carry over untouched. Returns rows deleted."""
     manifest = _load_manifest(path, latest_version(path))
     touched = _touched_files(
-        manifest["files"], path, spark, lambda df: df.filter(predicate)
+        manifest["files"], path, spark, manifest,
+        lambda df: df.filter(predicate),
     )
     deleted = 0
     files: list[str] = []
     if touched:
-        hit = spark.read.parquet(*[os.path.join(path, f) for f in touched])
+        hit = _read_files(spark, path, manifest, touched)
         kept = hit.filter(f"NOT ({predicate})")
         n_kept = kept.count()
         deleted = hit.count() - n_kept
@@ -943,9 +957,7 @@ def compact_small_files(
     ]
     if len(small) < 2:
         return {"version": v, "skipped": True, "files_compacted": 0}
-    df = spark.read.schema(StructType.fromJson(manifest["schema"])).parquet(
-        *[os.path.join(path, f) for f in small]
-    ).coalesce(target_files)
+    df = _read_files(spark, path, manifest, small).coalesce(target_files)
     files = _write_txn_files(df, path)
     return {
         "version": _commit(path, manifest, "compact_small", files, small),

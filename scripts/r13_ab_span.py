@@ -82,14 +82,6 @@ def main() -> None:
     registry["q03_join_agg_topk"].fn(spark, "/root/testdata/sf0.001").collect()
 
     def clear_caches() -> None:
-        for df in list(D._SHINGLE_CACHE.values()):
-            df.unpersist()
-        D._SHINGLE_CACHE.clear()
-        rc = getattr(D, "_RELATION_CACHE", None)
-        if rc is not None:
-            for df in list(rc.values()):
-                df.unpersist()
-            rc.clear()
         spark.catalog.clearCache()
 
     variants = [

@@ -61,16 +61,6 @@ def main() -> None:
         from parquet, matching the driver bench's once-per-run cold
         execution (reps 2+ would otherwise read persisted
         intermediates and under-report)."""
-        from gpu_olap_engine_spark.operators import dedup as D
-
-        for df in list(D._SHINGLE_CACHE.values()):
-            df.unpersist()
-        D._SHINGLE_CACHE.clear()
-        rc = getattr(D, "_RELATION_CACHE", None)
-        if rc is not None:
-            for df in list(rc.values()):
-                df.unpersist()
-            rc.clear()
         spark.catalog.clearCache()
 
     runs: dict[str, list[float]] = {n: [] for n in args.names}

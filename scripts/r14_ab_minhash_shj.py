@@ -29,8 +29,8 @@ def verify_shj(shingle_df, pairs):
     )
 
 def build(mode):
-    D._SHINGLE_CACHE.clear(); spark.catalog.clearCache()
-    sh = D._shingles_cached(docs, "doc_id", "text", 3)
+    spark.catalog.clearCache()
+    sh = D.shingles(docs, "doc_id", "text", 3).persist()
     pairs = D.lsh_candidate_pairs(D.minhash_signatures(sh))
     v = D.jaccard_verify(sh, pairs) if mode=="cur" else verify_shj(sh, pairs)
     return v.filter(F.col("jaccard") >= 0.5)

@@ -25,8 +25,8 @@ def verify_v(shingle_df, pairs, h1, h2):
             .select("id_a","id_b",(F.col("n_inter").cast("double")/(F.col("n_a")+F.col("n_b")-F.col("n_inter"))).alias("jaccard")))
 
 def build(mode):
-    D._SHINGLE_CACHE.clear(); spark.catalog.clearCache()
-    sh = D._shingles_cached(docs, "doc_id", "text", 3)
+    spark.catalog.clearCache()
+    sh = D.shingles(docs, "doc_id", "text", 3).persist()
     pairs = D.lsh_candidate_pairs(D.minhash_signatures(sh))
     h1, h2 = {"cur":(0,0), "j2":(0,1), "both":(1,1)}[mode]
     return verify_v(sh, pairs, h1, h2).filter(F.col("jaccard") >= 0.5)

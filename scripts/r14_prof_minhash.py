@@ -15,9 +15,8 @@ docs = T(spark, sf_dir, "documents")
 def noop(df): df.write.format("noop").mode("overwrite").save()
 
 def fresh_sh():
-    D._SHINGLE_CACHE.clear()
     spark.catalog.clearCache()
-    return D._shingles_cached(docs, "doc_id", "text", 3)
+    return D.shingles(docs, "doc_id", "text", 3).persist()
 
 for rep in range(2):
     sh = fresh_sh()

@@ -51,6 +51,53 @@ def test_simhash_near_for_planted_dups(spark):
         assert hamming <= 6, f"near-dup pair {r['id_a']},{r['id_b']} hamming={hamming}"
 
 
+@pytest.mark.parametrize("op", ["minhash_dedup_pairs", "near_dup_pairs"])
+def test_operator_rerun_sees_source_overwritten_through_spark(
+    spark, tmp_path, op
+):
+    """Operators persist their shared relations (shingles, the keyed
+    near-dup relation) in Spark's cache. Overwriting the source through
+    Spark and re-running over a fresh read returns pairs from the new
+    rows, not from the relation cached by the first run."""
+    path = str(tmp_path / "src")
+    if op == "minhash_dedup_pairs":
+        dup = "the quick brown fox jumps over the lazy dog once more"
+
+        def write(twin):
+            rows = [
+                (i, dup if i in (1, twin) else " ".join(f"w{i}x{j}" for j in range(12)))
+                for i in (1, 2, 3)
+            ]
+            spark.createDataFrame(rows, "doc_id long, text string").write.mode(
+                "overwrite"
+            ).parquet(path)
+
+        def run():
+            return D.minhash_dedup_pairs(spark.read.parquet(path), "doc_id", "text")
+    else:
+        vecs = {
+            1: [1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0, 8.0],
+            2: [8.0, -7.0, 6.0, -5.0, 4.0, -3.0, 2.0, -1.0],
+            3: [-1.0, 1.0, -1.0, 1.0, -1.0, 1.0, -1.0, 1.0],
+        }
+
+        def write(twin):
+            rows = [(i, vecs[1] if i == twin else vecs[i]) for i in (1, 2, 3)]
+            spark.createDataFrame(
+                rows, "vec_id long, embedding array<float>"
+            ).write.mode("overwrite").parquet(path)
+
+        def run():
+            return S.near_dup_pairs(
+                spark.read.parquet(path), threshold=0.9, block_m=4, dim=8
+            )
+
+    write(2)
+    assert {(r["id_a"], r["id_b"]) for r in run().collect()} == {(1, 2)}
+    write(3)
+    assert {(r["id_a"], r["id_b"]) for r in run().collect()} == {(1, 3)}
+
+
 def test_exact_dedup_drops_duplicates(spark):
     df = spark.createDataFrame(
         [(1, "x"), (1, "x"), (2, "y")], "id int, v string"
@@ -289,6 +336,21 @@ def test_star_components_equal_label_propagation(spark):
             for r in connected_components_star(edges).collect()
         }
         assert star == lp, (case, star, lp)
+
+
+@pytest.mark.parametrize(
+    "fn", ["connected_components", "connected_components_star"]
+)
+def test_components_reject_non_converged_rounds(spark, fn):
+    """A path graph longer than max_iter allows fails loudly instead of
+    returning the partial labeling held when the rounds ran out."""
+    from gpu_olap_engine_spark.operators import graph
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 20)], "id_a long, id_b long"
+    )
+    with pytest.raises(ValueError, match="did not converge"):
+        getattr(graph, fn)(edges, max_iter=2)
 
 
 # ----------------------------------------------------------------- joins

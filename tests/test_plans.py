@@ -569,8 +569,12 @@ def test_tpch_q12_derivation_stays_jvm_side(spark):
 # that re-introduces a branch-multiplied subtree fails the lint, not
 # a human audit N rounds later. Maxima are the audited single-pass
 # shapes (q141's 6 = the edge frame's inherent 3 references x the
-# 2-scan op self-join; sim_decontaminate's 4 = corpus/benchmark x
-# index-build/verify — asymmetric by design, see DESIGN_100TB §5).
+# 2-scan op self-join; sim_decontaminate's 1 = one persisted keyed
+# derive that both the corpus and the benchmark side filter).
+# Each entry is linted twice: as built, and rebuilt after
+# `spark.catalog.clearCache()` — a persist that only takes effect
+# through a relation cached by an earlier build shows up as
+# re-executed scans in the second form.
 SCAN_BUDGETS = {
     "q141_triangle_count": {"lineitem": 6},
     "q70_joint_dedup_flags": {"documents": 2, "embeddings": 2},
@@ -582,15 +586,22 @@ SCAN_BUDGETS = {
     "dedup_containment": {"documents": 1},
     "dedup_span_stats": {"documents": 3},
     "sim_near_dup_pairs": {"embeddings": 2},
-    "sim_decontaminate": {"embeddings": 4},
+    "sim_decontaminate": {"embeddings": 1},
     "sim_semdedup": {"embeddings": 3},
     "sim_bucketed_ann": {"embeddings": 2},
     "mm_exact_dedup": {"documents": 1},
 }
 
 
-@pytest.mark.parametrize("name", sorted(SCAN_BUDGETS))
-def test_scan_count_budget(spark, name):
+@pytest.mark.parametrize(
+    "name,cache_cleared",
+    [pytest.param(n, False, id=n) for n in sorted(SCAN_BUDGETS)]
+    + [pytest.param(n, True, id=f"{n}-cache_cleared") for n in sorted(SCAN_BUDGETS)],
+)
+def test_scan_count_budget(spark, name, cache_cleared):
+    if cache_cleared:
+        REGISTRY[name].fn(spark, SF_ORACLE)  # an earlier build of the entry
+        spark.catalog.clearCache()
     plan = plan_of(REGISTRY[name].fn(spark, SF_ORACLE))
     for table, budget in SCAN_BUDGETS[name].items():
         got = plan.count(f"{table}.parquet")

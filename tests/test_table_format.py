@@ -286,9 +286,9 @@ def test_merge_stats_fastpath_prunes_candidates(spark, tmp_path):
     seen = {}
     real = tf._touched_files
 
-    def spy(snap_files, p, s, matcher):
+    def spy(snap_files, *rest):
         seen["candidates"] = list(snap_files)
-        return real(snap_files, p, s, matcher)
+        return real(snap_files, *rest)
 
     tf._touched_files = spy
     try:
@@ -336,6 +336,49 @@ def test_append_missing_columns_land_as_null(spark, tmp_path):
     tf.append_table(spark.createDataFrame([(200,)], "k long"), path)
     r = [x for x in tf.read_snapshot(spark, path).collect() if x["k"] == 200]
     assert len(r) == 1 and r[0]["v"] is None
+
+
+@pytest.mark.parametrize("op", ["delete", "merge"])
+def test_rewrites_read_files_from_before_and_after_evolution(
+    spark, tmp_path, monkeypatch, op
+):
+    """A rewrite whose touched files span a schema evolution reads them
+    all through the table schema. Transaction directories are named
+    in commit order, so the pre-evolution file is listed first: a
+    reader that inferred the schema from that file's footer would drop
+    the new column from every rewritten row."""
+    import itertools
+    from types import SimpleNamespace
+
+    seq = itertools.count()
+    monkeypatch.setattr(
+        tf, "uuid",
+        SimpleNamespace(uuid4=lambda: SimpleNamespace(hex=f"{next(seq):032x}")),
+    )
+    path = str(tmp_path / "t")
+    tf.create_table(
+        spark.createDataFrame([(1, 10), (2, 20)], "k long, v long").coalesce(1),
+        path,
+    )
+    tf.append_table(
+        spark.createDataFrame(
+            [(3, 30, "c"), (4, 40, "d")], "k long, v long, tag string"
+        ).coalesce(1),
+        path,
+        merge_schema=True,
+    )
+    if op == "delete":
+        assert tf.delete_where(spark, path, "k IN (1, 3)") == 2
+        want = {(2, 20, None), (4, 40, "d")}
+    else:
+        updates = spark.createDataFrame(
+            [(1, 11, "a"), (3, 33, "cc")], "k long, v long, tag string"
+        )
+        stats = tf.merge_into(spark, path, updates, ["k"])
+        assert stats["files_rewritten"] == 2
+        want = {(1, 11, "a"), (2, 20, None), (3, 33, "cc"), (4, 40, "d")}
+    got = {(r["k"], r["v"], r["tag"]) for r in tf.read_snapshot(spark, path).collect()}
+    assert got == want
 
 
 def test_append_type_change_rejected(spark, tmp_path):
